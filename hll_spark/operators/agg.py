@@ -44,6 +44,7 @@ from pyspark.sql.types import (
 
 from ..sketchlib.hashing import murmur3_x64_128_low64
 from ..sketchlib.hll import HllConfig, HllSketch, hll_union_all
+from .scanutil import estimated_splits
 
 DEFAULT_SALT_SEED = 0x5B1FF00D
 
@@ -333,35 +334,6 @@ def sketch_partials(
 # levels 1+2: tree merge of serialized partials
 
 
-def _estimate_partials_partitions(partials: DataFrame) -> int:
-    """Estimated partition count of the level-0 partials frame, for the
-    single-vs-two-level merge topology choice.
-
-    Uses the logical plan's size statistics (catalog/file-index bytes)
-    divided by ``files.maxPartitionBytes`` instead of forcing physical
-    RDD materialization: ``.rdd.getNumPartitions()`` costs ~45 ms of
-    eager planning + RDD wrapper per query construction (measured r6),
-    while the stats walk is ~free and the 4096-partition threshold only
-    picks a merge topology — both topologies are value-identical, so an
-    estimate is sufficient. Falls back to the exact probe when stats
-    are unavailable (non-classic backends)."""
-    try:
-        size = int(
-            partials._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        max_pb = int(
-            partials.sparkSession._jsparkSession.sessionState()
-            .conf()
-            .filesMaxPartitionBytes()
-        )
-        return max(1, -(-size // max(max_pb, 1)))
-    except Exception:
-        try:
-            return partials.rdd.getNumPartitions()
-        except Exception:
-            return 1 << 20  # unknown: choose the scale-safe topology
-
-
 def _merge_blobs(spec: SketchSpec, blobs: pd.Series) -> bytes:
     acc = None
     for blob in blobs:
@@ -391,7 +363,10 @@ def merge_sketch_partials(
     """
     by = list(by or [])
     if two_level is None and not by:
-        two_level = _estimate_partials_partitions(partials) > 4096
+        # the split estimate only picks a topology (both are
+        # value-identical); without statistics take the scale-safe one
+        splits = estimated_splits(partials)
+        two_level = splits is None or splits > 4096
     out_schema = StructType(
         ([partials.schema[k] for k in by] if by else [])
         + [StructField("sketch", BinaryType()), StructField("rows_seen", LongType())]

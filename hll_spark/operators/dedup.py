@@ -106,24 +106,6 @@ def duplicate_groups(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
 # shingling + MinHash signatures (vectorized)
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 128,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, signature array<long>) — one batch-flattened pass: tokens
-    hashed once per Arrow batch, segmented min per doc (textkernels)."""
-
-    def sig_batch(texts: pd.Series) -> pd.Series:
-        sigs = minhash_matrix(texts, k, shingle_n).view(np.int64)
-        return pd.Series(list(sigs), index=texts.index)
-
-    sig_udf = pandas_udf(sig_batch, ArrayType(LongType()))
-    return df.select(F.col(id_col), sig_udf(F.col(text_col)).alias("signature"))
-
-
 def _minhash_enriched(
     df: DataFrame,
     text_col: str,

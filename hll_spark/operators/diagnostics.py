@@ -509,6 +509,32 @@ def _multi_theta_sketches(
     )
 
 
+def _plan_key(df: DataFrame):
+    """Grouping key for frames that may share a source plan: the
+    analyzed plan's 32-bit semantic hash, or object identity on
+    non-JVM backends. Equal keys are only a candidate match; confirm
+    with ``_same_plan``."""
+    try:
+        return df._jdf.queryExecution().analyzed().semanticHash()
+    except Exception:
+        return id(df)
+
+
+def _same_plan(a: DataFrame, b: DataFrame) -> bool:
+    """True when the two frames' analyzed plans compute the same result
+    (Spark's own confirmation after a semantic-hash match)."""
+    if a is b:
+        return True
+    try:
+        return bool(
+            a._jdf.queryExecution().analyzed().sameResult(
+                b._jdf.queryExecution().analyzed()
+            )
+        )
+    except Exception:
+        return False
+
+
 def fk_containment_report(
     columns,
     k: int = 65536,
@@ -569,18 +595,13 @@ def fk_containment_report(
     # group the requested columns by their source plan so one TABLE is
     # scanned once however many of its columns are profiled (the TPC-H
     # driver query reads two orders columns — previously two full
-    # scans; at 100 TB each duplicate scan is a full pass). Grouping
-    # key: the analyzed plan's semantic hash, object identity as the
-    # fallback for non-JVM backends.
-    def _pkey(df: DataFrame):
-        try:
-            return df._jdf.queryExecution().analyzed().semanticHash()
-        except Exception:
-            return id(df)
-
+    # scans; at 100 TB each duplicate scan is a full pass)
     by_src: dict = {}
     for df, col, lbl in cols:
-        by_src.setdefault(_pkey(df), (df, []))[1].append((col, lbl))
+        key = ("plan", _plan_key(df))
+        if key in by_src and not _same_plan(by_src[key][0], df):
+            key = ("id", id(df))  # hash collision: a different table
+        by_src.setdefault(key, (df, []))[1].append((col, lbl))
     frames = []
     for _, (df, col_lbls) in by_src.items():
         if len(col_lbls) == 1:

@@ -54,22 +54,12 @@ def _range_partitions(df: DataFrame) -> int:
     ~45 ms-per-build cost the sketch merge dropped in r6). Any positive
     count is CORRECT here (phases 2-3 derive per-partition totals from
     whatever layout phase 1 produced); the estimate only sizes the
-    shuffle."""
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        max_pb = int(
-            df.sparkSession._jsparkSession.sessionState()
-            .conf()
-            .filesMaxPartitionBytes()
-        )
-        return max(1, min(-(-size // max(max_pb, 1)), 100_000))
-    except Exception:
-        try:
-            return _range_partitions(df)
-        except Exception:
-            return 200
+    shuffle, so without statistics the shuffle default of 200 is used."""
+    from .scanutil import estimated_splits
+
+    splits = estimated_splits(df)
+    return 200 if splits is None else min(splits, 100_000)
+
 
 _MANIFEST_SCHEMA = StructType(
     [

@@ -76,8 +76,6 @@ def clean_corpus(
                 f"is {id_type or 'missing'} — string ids would cast "
                 "to null and silently empty the corpus"
             )
-    from .scanutil import plan_bytes
-
     kept = exact_dedup(df, [text_col], id_col)
     kept = (
         kept.where(duplicate_line_fraction(text_col) <= max_dup_line_fraction)
@@ -85,15 +83,9 @@ def clean_corpus(
         .where(mean_word_length(text_col).between(lo, hi))
         .where(quality_score(text_col) >= min_quality)
     )
-    if plan_bytes(df) > (1 << 30):
-        # ``kept`` feeds BOTH the near-dup pair finder and the
-        # survivor join below; on a LARGE corpus cut the lineage once
-        # so the exact dedup + gate filters do not execute per
-        # consumer (a full extra corpus pass). On a small input the
-        # duplicate subtrees overlap on idle cores and the
-        # materialization costs more than it saves (interleaved A/B,
-        # r6) — a scale decision from input statistics.
-        kept = kept.localCheckpoint(eager=False)
+    # ``kept`` feeds both the pair finder and the survivor join; a
+    # lineage cut here measured slower than recomputing it
+    # (OPTIMIZATION_r06.md)
     if exact_neardup:
         pairs = ngram_jaccard_pairs(
             kept, text_col, id_col, threshold=neardup_threshold,

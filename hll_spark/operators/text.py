@@ -38,14 +38,6 @@ def token_count(col: str | Column) -> Column:
     )
 
 
-def bpe_ish_token_count(col: str | Column) -> Column:
-    """Sub-word-ish token count: splits on whitespace AND letter/digit/
-    punctuation boundaries (a cheap BPE proxy for budget estimation)."""
-    c = F.col(col) if isinstance(col, str) else col
-    pieces = F.split(F.trim(c), r"\s+|(?<=[a-z])(?=[A-Z0-9])|(?<=[0-9])(?=[a-zA-Z])")
-    return F.size(F.filter(pieces, lambda x: F.length(x) > 0))
-
-
 def char_count(col: str | Column) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.length(c)
@@ -68,22 +60,9 @@ def digit_ratio(col: str | Column) -> Column:
     )
 
 
-_STOPWORDS = "the|a|an|and|or|of|to|in|is|it|that|for|on|with|as|was|at|by"
-
-
-def stopword_ratio(col: str | Column) -> Column:
-    """Fraction of whitespace tokens that are English stopwords."""
-    c = F.col(col) if isinstance(col, str) else col
-    toks = F.split(F.trim(F.lower(c)), r"\s+")
-    stops = F.size(F.filter(toks, lambda t: t.rlike(f"^({_STOPWORDS})$")))
-    return F.when(F.size(toks) == 0, F.lit(0.0)).otherwise(
-        stops.cast("double") / F.size(toks)
-    )
-
-
 def quality_score(col: str | Column) -> Column:
     """Heuristic document quality in [0,1]: long enough, not punctuation/
-    digit soup, some stopwords (prose-ness). Weights are arbitrary but
+    digit soup. Weights are arbitrary but
     fixed; the point is a deterministic, fully JVM-side scoring column."""
     c = F.col(col) if isinstance(col, str) else col
     len_score = F.least(F.length(c).cast("double") / F.lit(500.0), F.lit(1.0))

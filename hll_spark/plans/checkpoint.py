@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import time
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.agg import SketchSpec, merge_sketch_partials, sketch_partials
@@ -73,11 +74,17 @@ class CheckpointStore:
         target = self._target(job_id, f"{stage}__metrics")
         from ..localdf import fast_local_df
 
-        row = dict(metrics)
+        # numpy scalars unwrap to their Python value; None is a typed
+        # null (bigint), so a metric keeps one column type across appends
+        row = {
+            k: v.item() if isinstance(v, np.generic) else v
+            for k, v in metrics.items()
+        }
         row.update({"job_id": job_id, "stage": stage, "written_at": time.time()})
         keys = sorted(row)
         types = {
             bool: "boolean", int: "bigint", float: "double", str: "string",
+            type(None): "bigint",
         }
         schema = ", ".join(
             f"`{k}` {types.get(type(row[k]), 'string')}" for k in keys

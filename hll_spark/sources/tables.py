@@ -1,4 +1,4 @@
-"""Sources: testdata loaders and the deterministic synthetic pages table.
+"""Sources: the deterministic synthetic pages table.
 
 The reference has no I/O layer (its only "source" is bytes-from-file,
 /root/reference/README.md:144-157); all scan capability here is Spark's
@@ -30,19 +30,6 @@ from pyspark.sql.types import (
 
 from ..operators.extract import wrap_html_py
 
-TABLE_NAMES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
 PAGES_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -67,16 +54,6 @@ _LOREM = (
 ).split()
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load all driver testdata tables and register temp views."""
-    out = {}
-    for name in TABLE_NAMES:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
-
 _WORD_IDX_BASE = np.arange(256, dtype=np.int64) * 2654435761 % len(_LOREM)
 
 
@@ -87,11 +64,6 @@ def _text_from_digest(digest: bytes) -> str:
     seed = int.from_bytes(digest[9:13], "big")
     idx = (seed + _WORD_IDX_BASE[:n_words]) % len(_LOREM)
     return f"page {head} " + " ".join([_LOREM[i] for i in idx.tolist()])
-
-
-def _text_for_url(url: str) -> str:
-    """Deterministic text from url ONLY (per-row invariant, input_hint)."""
-    return _text_from_digest(hashlib.sha256(url.encode()).digest())
 
 
 def generate_pages_pdf(

@@ -83,6 +83,20 @@ def test_lineage_and_metrics_recorded(spark, store):
     assert metrics.iloc[0]["wall_ms"] > 0
 
 
+def test_metrics_types_stable_across_appends(spark, store):
+    """A None metric is a typed null and a numpy scalar its Python
+    value, so appends keep one column type and the path reads back."""
+    store.append_metrics("job_m", "partials", {"rows_seen": None})
+    store.append_metrics("job_m", "partials", {"rows_seen": np.int64(5)})
+    metrics = store.read_metrics("job_m", "partials")
+    assert dict(metrics.dtypes)["rows_seen"] == "bigint"
+    got = sorted(
+        (r["rows_seen"] for r in metrics.collect()),
+        key=lambda v: (v is not None, v),
+    )
+    assert got == [None, 5]
+
+
 def test_grouped_checkpoint(spark, store):
     rng = np.random.default_rng(3)
     df = spark.createDataFrame(

@@ -145,6 +145,36 @@ def test_fk_report_nulls_and_empty_child(spark, fk_frames):
     assert r["intersect_est"] == 0 and not r["is_fk_candidate"]
 
 
+def test_fk_report_plan_key_collision_keeps_tables_apart(spark, monkeypatch):
+    """Frames whose plan keys collide are scanned together only when
+    their plans really match: forcing every frame onto one key must not
+    change any per-table containment."""
+    from pyspark.sql import functions as F
+
+    from hll_spark.operators import diagnostics
+
+    parent = spark.range(100).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("k2")
+    )
+    child = spark.range(100).select((F.col("id") % 50).alias("k"))
+    cols = [(parent, "k", "parent"), (parent, "k2", "parent2"),
+            (child, "k", "child")]
+
+    def report():
+        return {
+            (r["child_label"], r["parent_label"]): (
+                r["distinct_child"], r["intersect_est"], r["containment"]
+            )
+            for r in diagnostics.fk_containment_report(cols, k=1024).collect()
+        }
+
+    want = report()
+    assert want[("child", "parent")] == (50, 50, 1.0)
+    assert want[("parent2", "parent")] == (100, 50, 0.5)
+    monkeypatch.setattr(diagnostics, "_plan_key", lambda df: 0)
+    assert report() == want
+
+
 def test_fk_report_validation(spark, fk_frames):
     from hll_spark.operators.diagnostics import fk_containment_report
 

@@ -107,6 +107,39 @@ def test_bad_cap_rejected(spark):
         pack_sequences(df, "doc_id", "n_tok", 0)
 
 
+def test_range_partitions_without_plan_stats_probes_once():
+    """Without the JVM probe (Spark Connect) the phase-1 shuffle falls
+    back to 200 ranges after ONE probe, not by recursing."""
+    from hll_spark.operators.packing import _range_partitions
+
+    class NoJvm:
+        probes = 0
+
+        @property
+        def _jdf(self):
+            self.probes += 1
+            raise AttributeError("_jdf is not available on this backend")
+
+    df = NoJvm()
+    assert _range_partitions(df) == 200
+    assert df.probes == 1
+
+
+def test_manifest_unchanged_without_plan_stats(spark, monkeypatch):
+    from hll_spark.operators import scanutil
+
+    random.seed(11)
+    rows = [(i, random.choice([0, 3, 250, 1024, 2500])) for i in range(120)]
+    monkeypatch.setattr(scanutil, "plan_bytes", lambda df: None)
+    want = (
+        ref_manifest(rows, 1024)
+        .sort_values(["pack_id", "pack_offset"])
+        .reset_index(drop=True)
+        .astype("int64")
+    )
+    pd.testing.assert_frame_equal(run(spark, rows, 1024), want)
+
+
 # ---------------------------------------------------------------- budget
 
 
