@@ -37,6 +37,7 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BinaryType,
+    DoubleType,
     LongType,
     StructField,
     StructType,
@@ -53,6 +54,27 @@ DEFAULT_SALT_SEED = 0x5B1FF00D
 # generic mergeable-sketch contract
 
 
+def _merge(a, b):
+    return a.merge(b)
+
+
+def _to_bytes(state) -> bytes:
+    return state.to_bytes()
+
+
+def _add_hashed(state, values: np.ndarray):
+    """update_fn of the hash-based sketches (HLL, CMS, Bloom, AMS, theta)."""
+    state.add_hashed(values)
+    return state
+
+
+def _update(state, values: np.ndarray):
+    """update_fn of the value-ordered and item sketches (KLL, t-digest,
+    Misra-Gries, bottom-k)."""
+    state.update(values)
+    return state
+
+
 @dataclass
 class SketchSpec:
     """zero/update/merge/serialize contract every sketch satisfies.
@@ -62,30 +84,29 @@ class SketchSpec:
     States are opaque Python objects; serialize_fn must produce bytes whose
     merge is associative (byte-exact for HLL/CMS/Bloom, bound-preserving
     for KLL/t-digest — SURVEY.md §2.3).
+
+    The serialization and merge fields default to the sketchlib
+    convention (``state.merge(other)``, ``state.to_bytes()``,
+    ``type(state).from_bytes(blob)``); the deserializer is resolved
+    once here, from one ``zero_fn()`` state, never per blob.
     """
 
     name: str
     zero_fn: Callable[[], Any]
     update_fn: Callable[[Any, np.ndarray], Any]
-    merge_fn: Callable[[Any, Any], Any]
-    to_bytes_fn: Callable[[Any], bytes]
-    from_bytes_fn: Callable[[bytes], Any]
+    merge_fn: Callable[[Any, Any], Any] = _merge
+    to_bytes_fn: Callable[[Any], bytes] = _to_bytes
+    from_bytes_fn: Callable[[bytes], Any] | None = None
+
+    def __post_init__(self) -> None:
+        if self.from_bytes_fn is None:
+            self.from_bytes_fn = type(self.zero_fn()).from_bytes
 
 
 def hll_spec(cfg: HllConfig | None = None) -> SketchSpec:
     cfg = cfg or HllConfig()
-
-    def update(state: HllSketch, values: np.ndarray) -> HllSketch:
-        state.add_hashed(values)
-        return state
-
     return SketchSpec(
-        name="hll",
-        zero_fn=lambda: HllSketch.empty(cfg),
-        update_fn=update,
-        merge_fn=lambda a, b: a.union(b),
-        to_bytes_fn=lambda s: s.to_bytes(),
-        from_bytes_fn=HllSketch.from_bytes,
+        "hll", lambda: HllSketch.empty(cfg), _add_hashed, merge_fn=HllSketch.union
     )
 
 
@@ -334,11 +355,20 @@ def sketch_partials(
 # levels 1+2: tree merge of serialized partials
 
 
-def _merge_blobs(spec: SketchSpec, blobs: pd.Series) -> bytes:
+def _fold_blobs(spec: SketchSpec, blobs) -> Any:
+    """Merge a sequence of serialized sketches into one state, skipping
+    null blobs; None when there is none."""
     acc = None
     for blob in blobs:
+        if blob is None:
+            continue
         s = spec.from_bytes_fn(bytes(blob))
         acc = s if acc is None else spec.merge_fn(acc, s)
+    return acc
+
+
+def _merge_blobs(spec: SketchSpec, blobs: pd.Series) -> bytes:
+    acc = _fold_blobs(spec, blobs)
     return spec.to_bytes_fn(acc if acc is not None else spec.zero_fn())
 
 
@@ -579,57 +609,69 @@ def hll_overlap_matrix(
     the pair arithmetic is O(groups^2) over KB blobs, trivially small
     wherever an all-pairs matrix is a sensible ask.
     """
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
+    from ..sketchlib.hll import hll_intersect_estimate
+
+    def pair(a: HllSketch, a_blob: bytes, b: HllSketch, b_blob: bytes):
+        return (
+            a.clone().union(b).estimate(),
+            hll_intersect_estimate(a_blob, b_blob),
+        )
+
+    return _overlap_matrix(
+        df, col, group_col, hll_spec(cfg), hash_mode, LongType(),
+        HllSketch.estimate, pair,
     )
 
-    from ..sketchlib.hll import HllSketch, hll_intersect_estimate
 
+def _overlap_matrix(
+    df: DataFrame,
+    col: str,
+    group_col: str,
+    spec: SketchSpec,
+    hash_mode: str,
+    est_type,
+    estimate: Callable[[Any], Any],
+    pair: Callable[[Any, bytes, Any, bytes], tuple],
+) -> DataFrame:
+    """All-pairs matrix shared by the HLL and theta overlap operators.
+
+    ``estimate(state)`` gives a group's distinct estimate and
+    ``pair(a, a_blob, b, b_blob)`` a pair's (union, intersection)
+    estimates; ``est_type`` types distinct_a/distinct_b/union_est.
+    """
     # level-0 partials only: the per-group tree merge would add a
     # keyed shuffle + a Python merge stage whose entire output is
     # immediately funneled into the ONE matrix-emit task below — merge
     # the (partition x group) blobs there instead (same single-reducer
-    # funnel either way; union order is irrelevant, HLL union is
-    # byte-canonical)
-    sk = sketch_partials(df, col, hll_spec(cfg), [group_col], hash_mode)
+    # funnel either way; both unions are order-insensitive)
+    sk = sketch_partials(df, col, spec, [group_col], hash_mode)
     gtype = sk.schema[group_col].dataType
     out_schema = StructType(
-        [
-            StructField("g_a", gtype),
-            StructField("g_b", gtype),
-            StructField("distinct_a", LongType()),
-            StructField("distinct_b", LongType()),
-            StructField("union_est", LongType()),
-            StructField("intersect_est", DoubleType()),
-            StructField("jaccard_est", DoubleType()),
+        [StructField("g_a", gtype), StructField("g_b", gtype)]
+        + [
+            StructField(name, est_type)
+            for name in ("distinct_a", "distinct_b", "union_est")
+        ]
+        + [
+            StructField(name, DoubleType())
+            for name in ("intersect_est", "jaccard_est")
         ]
     )
 
     def emit_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        # a NULL group key never joins under the former g_a < g_b
-        # condition; keep that contract
+        # a NULL group key pairs with nothing (SQL g_a < g_b semantics)
         pdf = pdf[pdf[group_col].notna()]
-        # merge the level-0 partial blobs per group (moved here from
-        # the former per-group merge stage; see the build note above)
-        merged: dict = {}
+        group_blobs: dict = {}
         for g, blob in zip(pdf[group_col], pdf["sketch"]):
-            s = HllSketch.from_bytes(bytes(blob))
-            if g in merged:
-                merged[g] = merged[g].union(s)
-            else:
-                merged[g] = s
-        groups = sorted(merged)
-        sketches = [merged[g] for g in groups]
-        blobs = [s.to_bytes() for s in sketches]
-        ests = [s.estimate() for s in sketches]
+            group_blobs.setdefault(g, []).append(blob)
+        groups = sorted(group_blobs)
+        sketches = [_fold_blobs(spec, group_blobs[g]) for g in groups]
+        blobs = [spec.to_bytes_fn(s) for s in sketches]
+        ests = [estimate(s) for s in sketches]
         rows = []
         for i in range(len(groups)):
             for j in range(i + 1, len(groups)):
-                union = sketches[i].clone().union(sketches[j]).estimate()
-                inter = hll_intersect_estimate(blobs[i], blobs[j])
+                union, inter = pair(sketches[i], blobs[i], sketches[j], blobs[j])
                 rows.append(
                     (
                         groups[i],

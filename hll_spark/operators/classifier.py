@@ -150,7 +150,8 @@ def fit_quality_classifier(
     """Fit the hard-sigmoid logistic model by ``iters`` rounds of
     exact-integer full-batch gradient descent.
 
-    ``label_col`` must be 0/1 (int or boolean). ``lr_micro`` is the
+    ``label_col`` must be 0/1 (int or boolean); rows repeating an
+    (id, label) pair count once. ``lr_micro`` is the
     learning rate in micro-units (2e6 = lr 2.0); the update divisor
     ``(n_eff * 1e6) div lr_micro`` is fixed before the first
     iteration, where ``n_eff = n + (pos_weight - 1) * n_pos``.
@@ -173,10 +174,17 @@ def fit_quality_classifier(
         raise ValueError(f"lr_micro must be >= 1, got {lr_micro}")
     if pos_weight < 1:
         raise ValueError(f"pos_weight must be >= 1, got {pos_weight}")
-    labels = train.select(
-        F.col(id_col),
-        F.col(label_col).cast("int").cast("long").alias("__y"),
-    ).persist()
+    # a training row repeated verbatim is one example: its features are
+    # already per-id distinct (hashed_features), so its label and error
+    # must be too
+    labels = (
+        train.select(
+            F.col(id_col),
+            F.col(label_col).cast("int").cast("long").alias("__y"),
+        )
+        .distinct()
+        .persist()
+    )
     # the bias rides the SAME aggregations as the feature weights, as a
     # synthetic always-present feature (feat = -1, outside the hash
     # range): score = sum of weights over {doc's features + bias} and
@@ -188,7 +196,9 @@ def fit_quality_classifier(
     feats = (
         hashed_features(train, text_col, id_col, n_features, bigrams, seed)
         .unionByName(
-            labels.select(id_col, F.lit(-1).cast("long").alias("feat"))
+            labels.select(id_col)
+            .distinct()
+            .withColumn("feat", F.lit(-1).cast("long"))
         )
         .persist()
     )

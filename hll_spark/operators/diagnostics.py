@@ -231,9 +231,9 @@ def profile_table(
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from ..sketchlib.hll import HllConfig, HllSketch
-    from ..sketchlib.kll import KllSketch
-    from ..sketchlib.mg import MisraGries
+    from ..sketchlib.hll import HllConfig
+    from .agg import _fold_blobs, hll_spec
+    from .sketches import kll_spec, mg_spec
 
     cols = list(df.columns if columns is None else columns)
     if not cols:
@@ -241,7 +241,8 @@ def profile_table(
     for c in cols:
         if c not in df.columns:
             raise ValueError(f"unknown column {c!r}")
-    cfg = hll_cfg or HllConfig()
+    hll_sp = hll_spec(hll_cfg or HllConfig())
+    mg_sp, kll_sp = mg_spec(mg_k), kll_spec(kll_k)
     qs = [float(q) for q in quantiles]
     is_num = {c: isinstance(df.schema[c].dataType, NumericType) for c in cols}
 
@@ -299,9 +300,9 @@ def profile_table(
                 "max_num": None,
                 "min_str": None,
                 "max_str": None,
-                "hll": HllSketch.empty(cfg),
-                "mg": MisraGries(mg_k),
-                "kll": KllSketch(kll_k) if is_num[c] else None,
+                "hll": hll_sp.zero_fn(),
+                "mg": mg_sp.zero_fn(),
+                "kll": kll_sp.zero_fn() if is_num[c] else None,
             }
             for c in cols
         }
@@ -394,20 +395,9 @@ def profile_table(
     )
 
     def finish(pdf: pd.DataFrame) -> pd.DataFrame:
-        hll = None
-        mg = None
-        kll = None
-        for blob in pdf["hll"]:
-            s = HllSketch.from_bytes(bytes(blob))
-            hll = s if hll is None else hll.union(s)
-        for blob in pdf["mg"]:
-            s = MisraGries.from_bytes(bytes(blob))
-            mg = s if mg is None else mg.merge(s)
-        for blob in pdf["kll"]:
-            if blob is None:
-                continue
-            s = KllSketch.from_bytes(bytes(blob))
-            kll = s if kll is None else kll.merge(s)
+        hll = _fold_blobs(hll_sp, pdf["hll"])
+        mg = _fold_blobs(mg_sp, pdf["mg"])
+        kll = _fold_blobs(kll_sp, pdf["kll"])
         mins = [x for x in pdf["min_str"] if x is not None]
         maxs = [x for x in pdf["max_str"] if x is not None]
         minn = pdf["min_num"].dropna()

@@ -22,7 +22,7 @@ from ..sketchlib.bloom import BloomFilter
 from ..sketchlib.cms import CountMinSketch
 from ..sketchlib.kll import KllSketch
 from ..sketchlib.tdigest import TDigest
-from .agg import SketchSpec, sketch_aggregate
+from .agg import SketchSpec, _add_hashed, _update, sketch_aggregate
 
 
 # ---------------------------------------------------------------------------
@@ -30,63 +30,19 @@ from .agg import SketchSpec, sketch_aggregate
 
 
 def cms_spec(depth: int = 5, width: int = 2048) -> SketchSpec:
-    def update(state: CountMinSketch, values: np.ndarray) -> CountMinSketch:
-        state.add_hashed(values)
-        return state
-
-    return SketchSpec(
-        name="cms",
-        zero_fn=lambda: CountMinSketch(depth, width),
-        update_fn=update,
-        merge_fn=lambda a, b: a.merge(b),
-        to_bytes_fn=lambda s: s.to_bytes(),
-        from_bytes_fn=CountMinSketch.from_bytes,
-    )
+    return SketchSpec("cms", lambda: CountMinSketch(depth, width), _add_hashed)
 
 
 def bloom_spec(m_bits: int = 1 << 20, k: int = 7) -> SketchSpec:
-    def update(state: BloomFilter, values: np.ndarray) -> BloomFilter:
-        state.add_hashed(values)
-        return state
-
-    return SketchSpec(
-        name="bloom",
-        zero_fn=lambda: BloomFilter(m_bits, k),
-        update_fn=update,
-        merge_fn=lambda a, b: a.merge(b),
-        to_bytes_fn=lambda s: s.to_bytes(),
-        from_bytes_fn=BloomFilter.from_bytes,
-    )
+    return SketchSpec("bloom", lambda: BloomFilter(m_bits, k), _add_hashed)
 
 
 def kll_spec(k: int = 200) -> SketchSpec:
-    def update(state: KllSketch, values: np.ndarray) -> KllSketch:
-        state.update(values)
-        return state
-
-    return SketchSpec(
-        name="kll",
-        zero_fn=lambda: KllSketch(k),
-        update_fn=update,
-        merge_fn=lambda a, b: a.merge(b),
-        to_bytes_fn=lambda s: s.to_bytes(),
-        from_bytes_fn=KllSketch.from_bytes,
-    )
+    return SketchSpec("kll", lambda: KllSketch(k), _update)
 
 
 def tdigest_spec(delta: float = 200.0) -> SketchSpec:
-    def update(state: TDigest, values: np.ndarray) -> TDigest:
-        state.update(values)
-        return state
-
-    return SketchSpec(
-        name="tdigest",
-        zero_fn=lambda: TDigest(delta),
-        update_fn=update,
-        merge_fn=lambda a, b: a.merge(b),
-        to_bytes_fn=lambda s: s.to_bytes(),
-        from_bytes_fn=TDigest.from_bytes,
-    )
+    return SketchSpec("tdigest", lambda: TDigest(delta), _update)
 
 
 # ---------------------------------------------------------------------------
@@ -330,16 +286,8 @@ def tdigest_quantiles(
 def theta_spec(k: int = 4096) -> SketchSpec:
     from ..sketchlib.theta import ThetaSketch
 
-    def update(state: ThetaSketch, values: np.ndarray) -> ThetaSketch:
-        return state.add_hashed(values)
-
     return SketchSpec(
-        name="theta",
-        zero_fn=lambda: ThetaSketch(k=k),
-        update_fn=update,
-        merge_fn=lambda a, b: a.union(b),
-        to_bytes_fn=lambda s: s.to_bytes(),
-        from_bytes_fn=ThetaSketch.from_bytes,
+        "theta", lambda: ThetaSketch(k=k), _add_hashed, merge_fn=ThetaSketch.union
     )
 
 
@@ -419,17 +367,7 @@ def theta_difference_udf():
 def mg_spec(k: int = 256) -> SketchSpec:
     from ..sketchlib.mg import MisraGries
 
-    def update(state: MisraGries, values: np.ndarray) -> MisraGries:
-        return state.update(values)
-
-    return SketchSpec(
-        name="mg",
-        zero_fn=lambda: MisraGries(k),
-        update_fn=update,
-        merge_fn=lambda a, b: a.merge(b),
-        to_bytes_fn=lambda s: s.to_bytes(),
-        from_bytes_fn=MisraGries.from_bytes,
-    )
+    return SketchSpec("mg", lambda: MisraGries(k), _update)
 
 
 def mg_sketch_agg(
@@ -508,17 +446,7 @@ def mg_top_items(
 def kmv_sample_spec(k: int = 1024) -> SketchSpec:
     from ..sketchlib.kmvsample import BottomKSample
 
-    def update(state: BottomKSample, values: np.ndarray) -> BottomKSample:
-        return state.update(values)
-
-    return SketchSpec(
-        name="kmv_sample",
-        zero_fn=lambda: BottomKSample(k),
-        update_fn=update,
-        merge_fn=lambda a, b: a.merge(b),
-        to_bytes_fn=lambda s: s.to_bytes(),
-        from_bytes_fn=BottomKSample.from_bytes,
-    )
+    return SketchSpec("kmv_sample", lambda: BottomKSample(k), _update)
 
 
 def distinct_sample(
@@ -578,18 +506,7 @@ def distinct_sample(
 def ams_spec(depth: int = 5, width: int = 1024, seed: int = 0) -> SketchSpec:
     from ..sketchlib.ams import AmsSketch
 
-    def update(state: AmsSketch, values: np.ndarray) -> AmsSketch:
-        state.add_hashed(values)
-        return state
-
-    return SketchSpec(
-        name="ams",
-        zero_fn=lambda: AmsSketch(depth, width, seed),
-        update_fn=update,
-        merge_fn=lambda a, b: a.merge(b),
-        to_bytes_fn=lambda s: s.to_bytes(),
-        from_bytes_fn=AmsSketch.from_bytes,
-    )
+    return SketchSpec("ams", lambda: AmsSketch(depth, width, seed), _add_hashed)
 
 
 def ams_sketch_agg(
@@ -790,7 +707,7 @@ def theta_overlap_matrix(
 
     Same shape as ``agg.hll_overlap_matrix`` — one grouped sketch
     build, then every unordered pair answered from the k-row blob
-    frame via a broadcast self-join — but the intersection is the
+    frame — but the intersection is the
     theta sketch's DIRECT common-theta estimate, so its error scales
     with the intersection instead of compounding three
     inclusion-exclusion terms (the analytical reason to reach for
@@ -800,78 +717,18 @@ def theta_overlap_matrix(
     Output per pair (g_a < g_b): (g_a, g_b, distinct_a, distinct_b,
     union_est, intersect_est, jaccard_est), estimates as doubles.
 
-    Plan shape: the base table is scanned exactly ONCE (a self-join on
-    the grouped agg would recompute the whole build); the g-row blob
-    frame lands in a single ``applyInPandas`` task that emits the full
-    matrix — O(groups^2) arithmetic over KB blobs.
+    Plan shape: as ``agg.hll_overlap_matrix`` (one scan, one
+    matrix-emit task).
     """
-    from pyspark.sql.types import StructField, StructType
-
     from ..sketchlib.theta import ThetaSketch
+    from .agg import _overlap_matrix
 
-    # level-0 partials only — the per-group merge stage's whole output
-    # funnels into the ONE matrix-emit task below anyway, so merge the
-    # (partition x group) blobs there (same rationale as
-    # agg.hll_overlap_matrix; theta union is order-insensitive)
-    from .agg import sketch_partials
+    def pair(a: ThetaSketch, a_blob: bytes, b: ThetaSketch, b_blob: bytes):
+        # union() mutates self: give it a throwaway copy
+        union = ThetaSketch.from_bytes(a_blob).union(b).estimate_float()
+        return union, a.intersect_estimate(b)
 
-    sk = sketch_partials(df, col, theta_spec(k), [group_col], hash_mode)
-    gtype = sk.schema[group_col].dataType
-    out_schema = StructType(
-        [StructField("g_a", gtype), StructField("g_b", gtype)]
-        + [
-            StructField(name, DoubleType())
-            for name in (
-                "distinct_a",
-                "distinct_b",
-                "union_est",
-                "intersect_est",
-                "jaccard_est",
-            )
-        ]
-    )
-
-    def emit_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        # NULL group keys never join under the former g_a < g_b
-        # condition; keep that contract
-        pdf = pdf[pdf[group_col].notna()]
-        # merge the level-0 partial blobs per group (moved here from
-        # the former per-group merge stage; see the build note above)
-        merged: dict = {}
-        for g, blob in zip(pdf[group_col], pdf["sketch"]):
-            s = ThetaSketch.from_bytes(bytes(blob))
-            if g in merged:
-                merged[g] = merged[g].union(s)
-            else:
-                merged[g] = s
-        groups = sorted(merged)
-        sketches = [merged[g] for g in groups]
-        blobs = [s.to_bytes() for s in sketches]
-        ests = [s.estimate_float() for s in sketches]
-        rows = []
-        for i in range(len(groups)):
-            for j in range(i + 1, len(groups)):
-                # union() mutates self: give it a throwaway copy
-                union = (
-                    ThetaSketch.from_bytes(blobs[i])
-                    .union(sketches[j])
-                    .estimate_float()
-                )
-                inter = sketches[i].intersect_estimate(sketches[j])
-                rows.append(
-                    (
-                        groups[i],
-                        groups[j],
-                        ests[i],
-                        ests[j],
-                        union,
-                        inter,
-                        inter / union if union > 0 else 0.0,
-                    )
-                )
-        return pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    return (
-        sk.groupBy(F.lit(0).alias("__all"))
-        .applyInPandas(lambda _, pdf: emit_pairs(pdf), out_schema)
+    return _overlap_matrix(
+        df, col, group_col, theta_spec(k), hash_mode, DoubleType(),
+        ThetaSketch.estimate_float, pair,
     )

@@ -11,11 +11,16 @@ Also provided: watermarked tumbling-window distinct counts built from the
 same kernel (late data beyond the watermark is dropped by Spark's window
 machinery; within the window the sketch union is order-insensitive, so
 late-but-accepted rows land exactly).
+
+Every operator folds through a :class:`~..operators.agg.SketchSpec` and
+projects its input exactly like the batch scaffold: NULL values are
+dropped before they reach the sketch and are not counted in
+``rows_seen``, as in ``hll_distinct`` and the other batch aggregates.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
+from typing import Any, Callable, Iterator, Tuple
 
 import numpy as np
 import pandas as pd
@@ -23,13 +28,21 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BinaryType,
+    DoubleType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
 
-from ..sketchlib.hll import HllConfig, HllSketch
+from ..operators.agg import (
+    SketchSpec,
+    _batch_values,
+    _not_null_cond,
+    _value_expr,
+    hll_spec,
+)
+from ..sketchlib.hll import HllConfig
 
 STATE_SCHEMA = StructType(
     [StructField("sketch", BinaryType()), StructField("rows_seen", LongType())]
@@ -43,6 +56,88 @@ SESSION_STATE_SCHEMA = StructType(
         StructField("last_ms", LongType()),
     ]
 )
+
+_DISTINCT_SCHEMA = StructType(
+    [
+        StructField("key", StringType()),
+        StructField("distinct_estimate", LongType()),
+        StructField("rows_seen", LongType()),
+        StructField("sketch", BinaryType()),
+    ]
+)
+
+
+def _project(stream_df: DataFrame, col: str, hash_mode: str | None, *keys):
+    """``keys`` plus the sketch value column ``__v``, NULL values
+    dropped — the batch level-0 projection."""
+    return stream_df.where(_not_null_cond(col)).select(
+        *keys, _value_expr(stream_df, col, hash_mode)
+    )
+
+
+def _fold_state(
+    spec: SketchSpec,
+    state: GroupState,
+    batches: Iterator[pd.DataFrame],
+    hash_mode: str | None,
+):
+    """Load the group's (sketch, rows_seen) state, fold every batch in
+    and store it back; returns (sketch, blob, rows_seen)."""
+    if state.exists:
+        blob, rows = state.get
+        sketch = spec.from_bytes_fn(bytes(blob))
+    else:
+        sketch, rows = spec.zero_fn(), 0
+    for pdf in batches:
+        if len(pdf):
+            vals = _batch_values(pdf, hash_mode)
+            sketch = spec.update_fn(sketch, vals)
+            rows += len(vals)
+    blob = spec.to_bytes_fn(sketch)
+    state.update((blob, rows))
+    return sketch, blob, rows
+
+
+def _keyed_fold(
+    stream_df: DataFrame,
+    col: str,
+    key_col: str,
+    spec: SketchSpec,
+    hash_mode: str | None,
+    out_schema: StructType,
+    emit: Callable[[str, Any, bytes, int], dict],
+) -> DataFrame:
+    """One sketch per ``key_col`` value with every micro-batch folded
+    in; after each batch that touches a key, ``emit(key, sketch, blob,
+    rows_seen)`` gives that key's output columns."""
+
+    def update(
+        key: Tuple[Any, ...],
+        batches: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        sketch, blob, rows = _fold_state(spec, state, batches, hash_mode)
+        yield pd.DataFrame(emit(str(key[0]), sketch, blob, rows))
+
+    projected = _project(
+        stream_df, col, hash_mode, F.col(key_col).cast("string").alias(key_col)
+    )
+    return projected.groupBy(key_col).applyInPandasWithState(
+        update,
+        outputStructType=out_schema,
+        stateStructType=STATE_SCHEMA,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _distinct_row(key: str, sketch, blob: bytes, rows: int) -> dict:
+    return {
+        "key": [key],
+        "distinct_estimate": [sketch.estimate()],
+        "rows_seen": [rows],
+        "sketch": [blob],
+    }
 
 
 def streaming_hll_distinct(
@@ -58,51 +153,9 @@ def streaming_hll_distinct(
     sketch — bounded by the FULL representation size regardless of
     stream length.
     """
-    cfg = cfg or HllConfig()
-    out_schema = StructType(
-        [
-            StructField("key", StringType()),
-            StructField("distinct_estimate", LongType()),
-            StructField("rows_seen", LongType()),
-            StructField("sketch", BinaryType()),
-        ]
-    )
-
-    def update(
-        key: Tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            blob, rows = state.get
-            sketch = HllSketch.from_bytes(bytes(blob))
-        else:
-            sketch, rows = HllSketch.empty(cfg), 0
-        for pdf in batches:
-            vals = pdf["__h"].to_numpy(np.int64)
-            sketch.add_hashed(vals)
-            rows += len(pdf)
-        blob = sketch.to_bytes()
-        state.update((blob, rows))
-        yield pd.DataFrame(
-            {
-                "key": [str(key[0])],
-                "distinct_estimate": [sketch.estimate()],
-                "rows_seen": [rows],
-                "sketch": [blob],
-            }
-        )
-
-    hashed = stream_df.select(
-        F.col(key_col).cast("string").alias(key_col),
-        F.xxhash64(F.col(col)).alias("__h"),
-    )
-    return hashed.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        stream_df, col, key_col, hll_spec(cfg), "xxhash64",
+        _DISTINCT_SCHEMA, _distinct_row,
     )
 
 
@@ -133,15 +186,7 @@ def windowed_hll_distinct(
     state is therefore evicted, not grown without bound, on a
     long-running stream.
     """
-    cfg = cfg or HllConfig()
-    out_schema = StructType(
-        [
-            StructField("key", StringType()),
-            StructField("distinct_estimate", LongType()),
-            StructField("rows_seen", LongType()),
-            StructField("sketch", BinaryType()),
-        ]
-    )
+    spec = hll_spec(cfg)
 
     def update(
         key: Tuple[Any, ...],
@@ -154,28 +199,12 @@ def windowed_hll_distinct(
             # admitted for this window, so the sketch is final — drop it.
             state.remove()
             return
-        if state.exists:
-            blob, rows = state.get
-            sketch = HllSketch.from_bytes(bytes(blob))
-        else:
-            sketch, rows = HllSketch.empty(cfg), 0
-        for pdf in batches:
-            sketch.add_hashed(pdf["__h"].to_numpy(np.int64))
-            rows += len(pdf)
-        blob = sketch.to_bytes()
-        state.update((blob, rows))
+        sketch, blob, rows = _fold_state(spec, state, batches, "xxhash64")
         end_ms = int(pd.Timestamp(win_end).value // 1_000_000)
         # the timeout must sit above the current watermark; windows whose
         # end already trails the watermark time out on the next trigger
         state.setTimeoutTimestamp(max(end_ms, state.getCurrentWatermarkMs() + 1))
-        yield pd.DataFrame(
-            {
-                "key": [str(win_start)],
-                "distinct_estimate": [sketch.estimate()],
-                "rows_seen": [rows],
-                "sketch": [blob],
-            }
-        )
+        yield pd.DataFrame(_distinct_row(str(win_start), sketch, blob, rows))
 
     # The watermark is declared on win_start (the grouping key), the
     # event-time column that actually reaches the stateful operator.
@@ -184,20 +213,20 @@ def windowed_hll_distinct(
     # requested — and the state timeout below still fires once no row
     # for the window can be admitted.
     bucketed = (
-        stream_df.select(
+        _project(
+            stream_df, col, "xxhash64",
             F.window(F.col(ts_col), window, slide or window).alias("__w"),
-            F.xxhash64(F.col(col)).alias("__h"),
         )
         .select(
             F.col("__w.start").alias("win_start"),
             F.col("__w.end").alias("win_end"),
-            "__h",
+            "__v",
         )
         .withWatermark("win_start", watermark)
     )
     return bucketed.groupBy("win_start", "win_end").applyInPandasWithState(
         update,
-        outputStructType=out_schema,
+        outputStructType=_DISTINCT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
@@ -223,7 +252,7 @@ def session_hll_distinct(
     or the event-time watermark passes ``last + gap`` (EventTimeTimeout,
     which also removes state for idle keys — no unbounded growth).
     """
-    cfg = cfg or HllConfig()
+    spec = hll_spec(cfg)
     gap_ms = int(gap_seconds) * 1000
     out_schema = StructType(
         [
@@ -251,7 +280,7 @@ def session_hll_distinct(
     ) -> Iterator[pd.DataFrame]:
         if state.hasTimedOut:
             blob, rows, start_ms, last_ms = state.get
-            sketch = HllSketch.from_bytes(bytes(blob))
+            sketch = spec.from_bytes_fn(bytes(blob))
             state.remove()
             yield pd.DataFrame([_row(key, start_ms, last_ms, sketch, rows)])
             return
@@ -260,10 +289,10 @@ def session_hll_distinct(
             return
         pdf = pd.concat(pdfs).sort_values("__ts_ms")
         ts = pdf["__ts_ms"].to_numpy(np.int64)
-        h = pdf["__h"].to_numpy(np.int64)
+        h = _batch_values(pdf, "xxhash64")
         if state.exists:
             blob, rows, start_ms, last_ms = state.get
-            sketch = HllSketch.from_bytes(bytes(blob))
+            sketch = spec.from_bytes_fn(bytes(blob))
         else:
             sketch, rows, start_ms, last_ms = None, 0, 0, 0
         closed: list[dict] = []
@@ -278,37 +307,37 @@ def session_hll_distinct(
                 # belonging to it would re-open a new tiny session
                 # rather than extend this emitted row — the same
                 # trade-off batch sessionize makes at partition edges).
-                late = HllSketch.empty(cfg)
-                late.add_hashed(h[seg])
+                late = spec.update_fn(spec.zero_fn(), h[seg])
                 closed.append(_row(key, seg_start, seg_end, late, len(seg)))
             elif sketch is not None and seg_start - last_ms <= gap_ms:
                 # In-gap of the open session. seg may also PREDATE the
                 # session start (late data within one gap of it) — then
                 # the session genuinely extends backward.
-                sketch.add_hashed(h[seg])
+                sketch = spec.update_fn(sketch, h[seg])
                 rows += len(seg)
                 start_ms = min(start_ms, seg_start)
                 last_ms = max(last_ms, seg_end)
             else:
                 if sketch is not None:
                     closed.append(_row(key, start_ms, last_ms, sketch, rows))
-                sketch = HllSketch.empty(cfg)
-                sketch.add_hashed(h[seg])
+                sketch = spec.update_fn(spec.zero_fn(), h[seg])
                 rows, start_ms, last_ms = len(seg), seg_start, seg_end
-        state.update((sketch.to_bytes(), rows, start_ms, last_ms))
+        state.update((spec.to_bytes_fn(sketch), rows, start_ms, last_ms))
         state.setTimeoutTimestamp(
             max(last_ms + gap_ms, state.getCurrentWatermarkMs() + 1)
         )
         if closed:
             yield pd.DataFrame(closed)
 
-    prepared = stream_df.withWatermark(ts_col, watermark).select(
+    prepared = _project(
+        stream_df.withWatermark(ts_col, watermark),
+        col,
+        "xxhash64",
         F.col(key_col).cast("string").alias(key_col),
         F.col(ts_col),  # watermarked event-time column must survive
         (F.col(ts_col).cast("timestamp_ltz").cast("double") * 1000)
         .cast("long")
         .alias("__ts_ms"),
-        F.xxhash64(F.col(col)).alias("__h"),
     )
     return prepared.groupBy(key_col).applyInPandasWithState(
         update,
@@ -375,36 +404,11 @@ def streaming_sketch_distinct(
             StructField("rows_seen", LongType()),
         ]
     )
-
-    def update(
-        key: Tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            blob, rows = state.get
-            sketch = spec.from_bytes_fn(bytes(blob))
-        else:
-            sketch, rows = spec.zero_fn(), 0
-        for pdf in batches:
-            sketch = spec.update_fn(sketch, pdf["__h"].to_numpy(np.int64))
-            rows += len(pdf)
-        blob = spec.to_bytes_fn(sketch)
-        state.update((blob, rows))
-        yield pd.DataFrame(
-            {"key": [str(key[0])], "sketch": [blob], "rows_seen": [rows]}
-        )
-
-    hashed = stream_df.select(
-        F.col(key_col).cast("string").alias(key_col),
-        F.xxhash64(F.col(col)).alias("__h"),
-    )
-    return hashed.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        stream_df, col, key_col, spec, "xxhash64", out_schema,
+        lambda key, _, blob, rows: {
+            "key": [key], "sketch": [blob], "rows_seen": [rows]
+        },
     )
 
 
@@ -436,7 +440,7 @@ def streaming_mg_topk(
     """
     if top_n < 1:
         raise ValueError(f"top_n must be >= 1, got {top_n}")
-    from ..sketchlib.mg import MisraGries
+    from ..operators.sketches import mg_spec
 
     out_schema = StructType(
         [
@@ -449,42 +453,21 @@ def streaming_mg_topk(
         ]
     )
 
-    def update(
-        key: Tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            blob, rows = state.get
-            mg = MisraGries.from_bytes(bytes(blob))
-        else:
-            mg, rows = MisraGries(k), 0
-        for pdf in batches:
-            mg.update(pdf["__item"])
-            rows += len(pdf)
-        state.update((mg.to_bytes(), rows))
+    def emit(key: str, mg, _blob: bytes, rows: int) -> dict:
         top = mg.top(top_n)
-        yield pd.DataFrame(
-            {
-                "key": [str(key[0])] * len(top),
-                "rank": np.arange(1, len(top) + 1, dtype=np.int64),
-                "item": [i for i, _ in top],
-                "est_count": np.array([c for _, c in top], dtype=np.int64),
-                "max_undercount": np.full(len(top), mg.offset, dtype=np.int64),
-                "rows_seen": np.full(len(top), rows, dtype=np.int64),
-            }
-        )
+        return {
+            "key": [key] * len(top),
+            "rank": np.arange(1, len(top) + 1, dtype=np.int64),
+            "item": [i for i, _ in top],
+            "est_count": np.array([c for _, c in top], dtype=np.int64),
+            "max_undercount": np.full(len(top), mg.offset, dtype=np.int64),
+            "rows_seen": np.full(len(top), rows, dtype=np.int64),
+        }
 
-    items = stream_df.select(
-        F.col(key_col).cast("string").alias(key_col),
-        F.col(item_col).cast("string").alias("__item"),
-    )
-    return items.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    # the item ships as a string: the output ``item`` column is one
+    items = stream_df.withColumn(item_col, F.col(item_col).cast("string"))
+    return _keyed_fold(
+        items, item_col, key_col, mg_spec(k), "raw", out_schema, emit
     )
 
 
@@ -515,7 +498,6 @@ def streaming_quantiles(
     names = [("p" + format(q * 100, "g")).replace(".", "_") for q in qs]
     if len(set(names)) != len(names):
         raise ValueError(f"duplicate quantile columns from qs={qs}")
-    from pyspark.sql.types import DoubleType
 
     out_schema = StructType(
         [
@@ -526,37 +508,13 @@ def streaming_quantiles(
         + [StructField(n, DoubleType()) for n in names]
     )
 
-    def update(
-        key: Tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            blob, rows = state.get
-            sketch = spec.from_bytes_fn(bytes(blob))
-        else:
-            sketch, rows = spec.zero_fn(), 0
-        for pdf in batches:
-            vals = pdf["__v"].to_numpy(np.float64)
-            vals = vals[~np.isnan(vals)]
-            if len(vals):
-                sketch = spec.update_fn(sketch, vals)
-                rows += len(vals)
-        blob = spec.to_bytes_fn(sketch)
-        state.update((blob, rows))
-        row = {"key": [str(key[0])], "sketch": [blob], "rows_seen": [rows]}
+    def emit(key: str, sketch, blob: bytes, rows: int) -> dict:
+        row = {"key": [key], "sketch": [blob], "rows_seen": [rows]}
         for n, q in zip(names, qs):
             row[n] = [float(sketch.quantile(q)) if rows else float("nan")]
-        yield pd.DataFrame(row)
+        return row
 
-    projected = stream_df.select(
-        F.col(key_col).cast("string").alias(key_col),
-        F.col(col).cast("double").alias("__v"),
-    ).where(F.col("__v").isNotNull())
-    return projected.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    values = stream_df.withColumn(col, F.col(col).cast("double"))
+    return _keyed_fold(
+        values.where(~F.isnan(col)), col, key_col, spec, None, out_schema, emit
     )

@@ -190,6 +190,26 @@ def test_pos_weight_matches_reference_and_rescues_minority(spark):
     assert got[0][1] == 1  # balanced: the positive is recovered
 
 
+def test_duplicate_id_row_counts_once(spark):
+    """A training row repeated under the same id must train the same
+    model as the frame without the repeat: the synthetic bias feature
+    and the doc's error enter the gradient once per id."""
+
+    def fit(rows):
+        df = spark.createDataFrame(rows, "doc_id long, text string, y int")
+        model = fit_quality_classifier(
+            df, "y", n_features=256, iters=3, lr_micro=2 * MICRO
+        )
+        bias = model.bias.collect()[0]["b"]
+        weights = {r.feat: r.w for r in model.weights.collect()}
+        return bias, weights
+
+    dedup_bias, dedup_weights = fit(CORPUS)
+    dup_bias, dup_weights = fit(CORPUS + [CORPUS[1]])
+    assert dup_bias == dedup_bias
+    assert dup_weights == dedup_weights
+
+
 def test_hashed_features_presence_and_range(spark):
     df = spark.createDataFrame(
         [(0, "a b a b a"), (1, None), (2, "   ")],

@@ -147,3 +147,34 @@ def test_overlap_matrix_plans_scan_base_once(spark):
         assert "Join" not in plan, plan
         assert plan.count("Range (") == 1, plan
         assert len(out.collect()) == 6  # C(4,2) pairs
+
+
+def _overlap_schema(gtype, est):
+    return (
+        f"g_a {gtype}, g_b {gtype}, distinct_a {est}, distinct_b {est}, "
+        f"union_est {est}, intersect_est double, jaccard_est double"
+    )
+
+
+@pytest.mark.parametrize("theta", [False, True], ids=["hll", "theta"])
+def test_overlap_matrix_degenerate_groups_emit_no_rows(spark, theta):
+    """One group has no pair and an all-NULL group column has no group:
+    both return zero rows, typed exactly as a populated matrix."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from hll_spark.operators.sketches import theta_overlap_matrix
+
+    build = theta_overlap_matrix if theta else hll_overlap_matrix
+    want = _parse_datatype_string(
+        _overlap_schema("string", "double" if theta else "bigint")
+    )
+    single = spark.createDataFrame(
+        [("a", v) for v in range(30)], "grp string, user_id long"
+    ).repartition(3)
+    all_null = spark.createDataFrame(
+        [(None, v) for v in range(30)], "grp string, user_id long"
+    ).repartition(3)
+    for df in (single, all_null):
+        out = build(df, "user_id", "grp")
+        assert out.schema == want
+        assert out.collect() == []

@@ -1,5 +1,7 @@
 """Structured Streaming stateful sketch tests (file source, availableNow)."""
 
+import datetime
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -675,6 +677,90 @@ def test_streaming_quantiles_tdigest_and_name_guard(spark, tmp_path):
     got = spark.read.parquet(outd).toPandas().iloc[0]
     true99 = np.quantile(vals, 0.99)
     assert abs(got["p99"] - true99) < 0.15
+
+
+# two micro-batches of (user_id, event_type, ts); batch 1 carries one
+# NULL user_id, which every streaming operator must ignore exactly as
+# the batch aggregates do
+_NULL_BATCHES = [
+    [(1, "a"), (None, "a"), (2, "a"), (1, "b")],
+    [(3, "a"), (2, "a"), (5, "b")],
+]
+
+
+def _stream_null_batches(spark, tmp_path, build_query):
+    """Run ``build_query`` over the two batches as two availableNow
+    triggers; returns (all emitted rows, the batch frame of all rows)."""
+    src = str(tmp_path / "nsrc")
+    outd = str(tmp_path / "nout")
+    ts = datetime.datetime(2024, 1, 1, 0, 10)
+    schema = "user_id long, event_type string, ts timestamp"
+    for rows in _NULL_BATCHES:
+        spark.createDataFrame(
+            [(u, e, ts) for u, e in rows], schema
+        ).write.mode("append").parquet(src)
+        run_stream(spark, src, str(tmp_path / "nck"), build_query, outd)
+    everything = spark.createDataFrame(
+        [(u, e, ts) for rows in _NULL_BATCHES for u, e in rows], schema
+    )
+    return spark.read.parquet(outd).toPandas(), everything
+
+
+def _latest(rows):
+    return rows.sort_values("batch_id").groupby("key").last()
+
+
+def test_streaming_hll_distinct_ignores_null_like_batch(spark, tmp_path):
+    from hll_spark.operators.agg import hll_sketch_agg
+    from hll_spark.sketchlib.hll import HllSketch
+
+    rows, everything = _stream_null_batches(
+        spark, tmp_path,
+        lambda s: streaming_hll_distinct(s, "user_id", "event_type", CFG),
+    )
+    got = _latest(rows)
+    batch = hll_sketch_agg(everything, "user_id", by=["event_type"], cfg=CFG)
+    for r in batch.collect():
+        assert got.loc[r.event_type, "rows_seen"] == r.rows_seen
+        assert got.loc[r.event_type, "distinct_estimate"] == (
+            HllSketch.from_bytes(bytes(r.sketch)).estimate()
+        )
+    # key a: user ids {1, 2, 3} over 4 non-null rows
+    assert got.loc["a", "distinct_estimate"] == 3
+    assert got.loc["a", "rows_seen"] == 4
+
+
+def test_windowed_hll_distinct_ignores_null_like_batch(spark, tmp_path):
+    from hll_spark.operators.agg import hll_sketch_agg
+    from hll_spark.sketchlib.hll import HllSketch
+
+    rows, everything = _stream_null_batches(
+        spark, tmp_path,
+        lambda s: windowed_hll_distinct(s, "user_id", "ts", "1 hour", "2 hours", CFG),
+    )
+    got = _latest(rows)
+    assert list(got.index) == ["2024-01-01 00:00:00"]
+    r = hll_sketch_agg(everything, "user_id", cfg=CFG).collect()[0]
+    assert got["rows_seen"].iloc[0] == r.rows_seen == 6
+    assert got["distinct_estimate"].iloc[0] == (
+        HllSketch.from_bytes(bytes(r.sketch)).estimate()
+    ) == 4
+
+
+def test_streaming_mg_topk_ignores_null_like_batch(spark, tmp_path):
+    from hll_spark.operators.sketches import mg_sketch_agg
+    from hll_spark.streaming.stateful import streaming_mg_topk
+
+    rows, everything = _stream_null_batches(
+        spark, tmp_path,
+        lambda s: streaming_mg_topk(s, "user_id", "event_type", k=16),
+    )
+    got = _latest(rows)
+    batch = mg_sketch_agg(everything, "user_id", k=16, by=["event_type"])
+    for r in batch.collect():
+        assert got.loc[r.event_type, "rows_seen"] == r.rows_seen
+    assert got.loc["a", "rows_seen"] == 4
+    assert rows["item"].notna().all() and "None" not in set(rows["item"])
 
 
 def test_streaming_dedup_increment_filters_vs_static_index(spark, tmp_path):
